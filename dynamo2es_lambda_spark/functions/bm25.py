@@ -31,15 +31,17 @@ def idf(n_docs: float, df) -> np.ndarray:
     return np.log1p((float(n_docs) - df + 0.5) / (df + 0.5))
 
 
-def tf_norm(tf, dl, avgdl: float, k1: float = K1, b: float = B) -> np.ndarray:
+def tf_norm(tf, dl, avgdl, k1: float = K1, b: float = B) -> np.ndarray:
     """tf / (tf + k1*(1 - b + b*dl/avgdl)) — the doc-dependent factor.
+    ``avgdl`` is a scalar or a per-posting array (multi-field queries).
 
     Monotone increasing in tf, decreasing in dl: the block-max bound
     uses tf_norm(max_tf, min_dl) (functions/codec.py block metadata).
     """
     tf = np.asarray(tf, dtype=np.float64)
     dl = np.asarray(dl, dtype=np.float64)
-    return tf / (tf + k1 * (1.0 - b + b * dl / float(avgdl)))
+    avgdl = np.asarray(avgdl, dtype=np.float64)
+    return tf / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def score(tf, dl, df, n_docs: float, avgdl: float,

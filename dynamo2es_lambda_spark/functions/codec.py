@@ -8,11 +8,10 @@ docID+tf blocks with block-max metadata").
 All encode/decode paths are numpy-vectorized (no per-element Python loops —
 the only loops are over the ≤10 varbyte byte-groups).
 
-Wire format per block (BLOCK_SIZE docs max):
-  doc_bytes: varbyte(gaps) where gaps[0] = doc_ids[0] - (prev block's last + 1)
-             … blocks are independent: gaps[0] = doc_ids[0] - base, base
-             passed explicitly (we store absolute first/last per block, so
-             gaps[0] = doc_ids[0] - doc_first → 0; decode uses doc_first).
+Wire format per block (one term, at most BLOCK_SIZE docs, doc ids ascending):
+  doc_bytes: varbyte(gaps) with gaps[0] = 0 and gaps[i] = doc_ids[i] -
+             doc_ids[i-1]; the first doc id is stored absolutely in doc_first,
+             so every block decodes on its own.
   tf_bytes:  varbyte(tf - 1)   (tf >= 1 always)
   dl_bytes:  varbyte(dl - 1)   (doclen >= 1 if the doc has this term) — the
              Lucene-norms analog inlined into the block so query scoring
@@ -24,8 +23,18 @@ Positional payloads (optional, for phrase queries — Lucene ``.pos`` analog):
   pos_bytes: concatenation, in block doc order, of each doc's varbyte-encoded
              token positions for the term (first position absolute, rest
              delta-coded). Per-doc boundaries are implicit: doc d contributes
-             exactly tf(d) values, so one flat varbyte_decode + a segmented
-             cumsum keyed by the tf array reconstructs every position list.
+             exactly tf(d) values. Null in stores built without positions.
+
+Readers outside this module decode only through :func:`decode_batch`
+(``tests/test_codec_containment.py`` enforces it). It takes a frame of block
+rows and decodes each payload column in ONE varbyte pass over the
+concatenated bytes (a block holds exactly n_docs gap/tf/dl values and tf(d)
+positions per doc, so segmented cumsums recover every block's values). Its
+output is the per-block :func:`decode_block` output concatenated in frame
+row order — it does not sort. Blocks of one term written by several CDC
+batches are separate sorted runs, so a term's doc ids are sorted only within
+each block; callers that need one sorted list per term sort it themselves
+(``plans.search._decode_positional_terms``).
 """
 
 from __future__ import annotations
@@ -193,14 +202,37 @@ def decode_block(
     return doc_ids, tfs, dls
 
 
-def decode_block_positions(
-    pos_bytes: bytes, tfs: np.ndarray
-) -> tuple[np.ndarray, np.ndarray]:
-    """Block pos_bytes → (flat absolute positions, per-doc start offsets).
+def _decode_column(col) -> np.ndarray:
+    """Concatenate a column of varbyte strings and decode it in one pass."""
+    return varbyte_decode(b"".join(col)).astype(np.int64)
 
-    Doc i's positions are ``flat[starts[i] : starts[i] + tfs[i]]``, ascending.
+
+def decode_batch(
+    pdf, tf: bool = False, dl: bool = False, positions: bool = False
+) -> dict[str, np.ndarray]:
+    """Frame of block rows → flat int64 per-posting arrays, in row order.
+
+    ``pdf`` (pandas) needs n_docs, doc_first and doc_bytes, plus tf_bytes /
+    dl_bytes / pos_bytes for the payloads asked for (positions also read
+    tf_bytes). Returns ``counts`` (per-block n_docs) and ``doc_int``, plus
+    ``tf`` and ``dl`` when asked. ``positions=True`` adds ``tf``, the flat
+    absolute ``positions`` and per-doc ``pos_starts``: doc i's positions are
+    ``positions[pos_starts[i] : pos_starts[i] + tf[i]]``, ascending. A block
+    whose pos_bytes is null owns no positions.
     """
-    deltas = varbyte_decode(pos_bytes).astype(np.int64)
-    flat = segmented_positions(deltas, tfs)
-    starts = np.concatenate(([0], np.cumsum(tfs)[:-1])).astype(np.int64)
-    return flat, starts
+    counts = pdf["n_docs"].to_numpy(np.int64)
+    gaps = _decode_column(pdf["doc_bytes"])
+    gaps[np.cumsum(counts) - counts] += pdf["doc_first"].to_numpy(np.int64)
+    out = {"counts": counts, "doc_int": segmented_positions(gaps, counts)}
+    if tf or positions:
+        out["tf"] = _decode_column(pdf["tf_bytes"]) + 1
+    if dl:
+        out["dl"] = _decode_column(pdf["dl_bytes"]) + 1
+    if positions:
+        has = pdf["pos_bytes"].notna().to_numpy()
+        lens = np.where(np.repeat(has, counts), out["tf"], 0)
+        out["positions"] = segmented_positions(
+            _decode_column(pdf["pos_bytes"][has]), lens[lens > 0]
+        )
+        out["pos_starts"] = np.cumsum(lens) - lens
+    return out

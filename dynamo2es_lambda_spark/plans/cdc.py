@@ -506,111 +506,62 @@ def compact_store(
         )
 
         def rewrite(key, left: "pd.DataFrame", right: "pd.DataFrame"):
-            # Vectorized over the whole segment (guide §4.2 — the same
-            # grouped-varbyte machinery as the build's block encoder): one
-            # flat decode of every block's doc ids, one isin against the
-            # dead list, and only blocks that actually LOST docs re-encode
-            # — as grouped encodes over the kept rows. Unchanged blocks
-            # pass through with their original bytes (incl. positional
-            # payloads) untouched. Byte-identical to the former per-row
-            # decode_block/encode_blocks loop: the gap/tf/dl streams are
-            # the same arrays, encoded by the same varbyte kernel.
+            # Vectorized over the whole segment: one decode of every
+            # block's doc ids, one isin against the dead list, and only
+            # blocks that actually LOST docs decode their payloads and
+            # re-encode — as grouped encodes over the kept postings.
+            # Unchanged blocks pass through with their original bytes.
             dead_arr = np.sort(right["doc_int"].to_numpy(np.int64))
             if not len(left):
                 return pd.DataFrame(columns=block_cols)
             counts = left["n_docs"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            gaps = codec.varbyte_decode(
-                b"".join(left["doc_bytes"])
-            ).astype(np.int64)
-            gaps[starts] += left["doc_first"].to_numpy(np.int64)
-            ids = codec.segmented_positions(gaps, counts)
-            keep = ~np.isin(ids, dead_arr)
-            kept_counts = np.add.reduceat(keep.astype(np.int64), starts)
+            keep = ~np.isin(codec.decode_batch(left)["doc_int"], dead_arr)
+            kept_counts = np.add.reduceat(
+                keep.astype(np.int64), np.cumsum(counts) - counts
+            )
             unchanged = kept_counts == counts
             changed = ~unchanged & (kept_counts > 0)
-            parts = []
-            if unchanged.any():
-                parts.append(
-                    left.iloc[np.flatnonzero(unchanged)][block_cols]
-                )
-            if changed.any() and has_pos:
-                # positional payloads re-slice per doc — the (changed,
-                # positional) rows keep the exact row-wise re-encode
-                out = []
-                for i in np.flatnonzero(changed):
-                    row = left.iloc[i]
-                    lo = starts[i]
-                    k = keep[lo: lo + counts[i]]
-                    tfs_b = codec.varbyte_decode(
-                        row["tf_bytes"]
-                    ).astype(np.int64) + 1
-                    dls_b = codec.varbyte_decode(
-                        row["dl_bytes"]
-                    ).astype(np.int64) + 1
-                    pos_payloads = None
-                    if row["pos_bytes"] is not None:
-                        flat, pstarts = codec.decode_block_positions(
-                            row["pos_bytes"], tfs_b
-                        )
-                        kept = np.nonzero(k)[0]
-                        cat = np.concatenate(
-                            [flat[pstarts[j]: pstarts[j] + tfs_b[j]]
-                             for j in kept]
-                        )
-                        pos_payloads = codec.varbyte_encode_grouped(
-                            codec.segmented_deltas(cat, tfs_b[kept]),
-                            tfs_b[kept],
-                        )
-                    b = codec.encode_blocks(
-                        ids[lo: lo + counts[i]][k], tfs_b[k], dls_b[k],
-                        pos_payloads=pos_payloads,
-                    )[0]
-                    b["block_id"] = row["block_id"]
-                    b["term"] = row["term"]
-                    b["seg"] = row["seg"]
-                    b["term_bucket"] = row["term_bucket"]
-                    out.append(b)
-                parts.append(pd.DataFrame(out)[block_cols])
-            elif changed.any():
-                sel_rows = np.repeat(changed, counts) & keep
-                # raw stored values (tf-1 / dl-1) re-encode as-is; +1 only
-                # for the max/min block metadata
-                tfs_raw = codec.varbyte_decode(
-                    b"".join(left["tf_bytes"])
-                ).astype(np.int64)
-                dls_raw = codec.varbyte_decode(
-                    b"".join(left["dl_bytes"])
-                ).astype(np.int64)
-                kept_ids = ids[sel_rows]
-                new_counts = kept_counts[changed]
-                nstarts = np.concatenate(([0], np.cumsum(new_counts)[:-1]))
-                nends = np.cumsum(new_counts)
-                gaps2 = codec.segmented_deltas(kept_ids, new_counts)
-                doc_firsts = kept_ids[nstarts]
-                gaps2[nstarts] = 0
-                ch = np.flatnonzero(changed)
-                parts.append(pd.DataFrame({
-                    "term": left["term"].to_numpy(object)[ch],
-                    "seg": left["seg"].to_numpy()[ch],
-                    "block_id": left["block_id"].to_numpy()[ch],
-                    "n_docs": new_counts,
-                    "doc_first": doc_firsts,
-                    "doc_last": kept_ids[nends - 1],
-                    "max_tf": np.maximum.reduceat(
-                        tfs_raw[sel_rows], nstarts) + 1,
-                    "min_dl": np.minimum.reduceat(
-                        dls_raw[sel_rows], nstarts) + 1,
-                    "doc_bytes": codec.varbyte_encode_grouped(
-                        gaps2, new_counts),
-                    "tf_bytes": codec.varbyte_encode_grouped(
-                        tfs_raw[sel_rows], new_counts),
-                    "dl_bytes": codec.varbyte_encode_grouped(
-                        dls_raw[sel_rows], new_counts),
-                    "term_bucket": left["term_bucket"].to_numpy()[ch],
-                })[block_cols])
-            if not parts:
-                return pd.DataFrame(columns=block_cols)
+            parts = [left[unchanged][block_cols]]
+            if changed.any():
+                ch = left[changed]
+                d = codec.decode_batch(ch, tf=True, dl=True, positions=has_pos)
+                k = keep[np.repeat(changed, counts)]
+                n_new = kept_counts[changed]
+                nstarts = np.cumsum(n_new) - n_new
+                ids, tfs, dls = d["doc_int"][k], d["tf"][k], d["dl"][k]
+                gaps = codec.segmented_deltas(ids, n_new)
+                gaps[nstarts] = 0
+                out = pd.DataFrame({
+                    "term": ch["term"].to_numpy(object),
+                    "seg": ch["seg"].to_numpy(),
+                    "block_id": ch["block_id"].to_numpy(),
+                    "n_docs": n_new,
+                    "doc_first": ids[nstarts],
+                    "doc_last": ids[nstarts + n_new - 1],
+                    "max_tf": np.maximum.reduceat(tfs, nstarts),
+                    "min_dl": np.minimum.reduceat(dls, nstarts),
+                    "doc_bytes": codec.varbyte_encode_grouped(gaps, n_new),
+                    "tf_bytes": codec.varbyte_encode_grouped(tfs - 1, n_new),
+                    "dl_bytes": codec.varbyte_encode_grouped(dls - 1, n_new),
+                    "term_bucket": ch["term_bucket"].to_numpy(),
+                })
+                if has_pos:
+                    lens = np.diff(
+                        np.append(d["pos_starts"], d["positions"].size)
+                    )
+                    kept_lens = lens[k]
+                    payloads = codec.varbyte_encode_grouped(
+                        codec.segmented_deltas(
+                            d["positions"][np.repeat(k, lens)],
+                            kept_lens[kept_lens > 0],
+                        ),
+                        np.add.reduceat(kept_lens, nstarts),
+                    )
+                    out["pos_bytes"] = [
+                        p if has else None
+                        for p, has in zip(payloads, ch["pos_bytes"].notna())
+                    ]
+                parts.append(out[block_cols])
             return pd.concat(parts, ignore_index=True)[block_cols]
 
         pos_part = "pos_bytes binary, " if has_pos else ""

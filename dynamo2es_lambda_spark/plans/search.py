@@ -403,27 +403,25 @@ def explain_score(
     blocks = (
         _matched_blocks(spark, store, qt)
         .filter((F.col("doc_first") <= di) & (F.col("doc_last") >= di))
-        .select("term", "doc_first", "doc_bytes", "tf_bytes", "dl_bytes")
+        .select("term", "n_docs", "doc_first", "doc_bytes", "tf_bytes",
+                "dl_bytes")
         .toPandas()
     )
     out = []
     dfs = dict(zip(qt["term"], qt["df"]))
     qtfs = dict(zip(qt["term"], qt["qtf"]))
-    for r in blocks.itertuples(index=False):
-        ids, tfs, dls = codec.decode_block(
-            r.doc_first, r.doc_bytes, r.tf_bytes, r.dl_bytes
-        )
-        pos = np.searchsorted(ids, di)
-        if pos >= ids.size or ids[pos] != di:
-            continue
-        tf, dl = int(tfs[pos]), int(dls[pos])
-        df_t = float(dfs[r.term])
+    d = codec.decode_batch(blocks, tf=True, dl=True)
+    terms = np.repeat(blocks["term"].to_numpy(object), d["counts"])
+    for j in np.flatnonzero(d["doc_int"] == di):
+        term = terms[j]
+        tf, dl = int(d["tf"][j]), int(d["dl"][j])
+        df_t = float(dfs[term])
         idf = float(bm25.idf(n_docs, df_t))
         norm = float(bm25.tf_norm(np.array([tf]), np.array([dl]), avgdl)[0])
-        qtf = int(qtfs[r.term])
+        qtf = int(qtfs[term])
         out.append(
             (
-                r.term[len(prefix):] if prefix else r.term,
+                term[len(prefix):] if prefix else term,
                 qtf, int(df_t), idf, tf, dl, norm,
                 qtf * idf * (bm25.K1 + 1.0) * norm,
             )
@@ -516,25 +514,18 @@ def _decode_tfs(joined: DataFrame) -> DataFrame:
     norm (the norm applies to the cross-field combined tf)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # batch-level decode (guide §4.2) — same shape as
-        # _score_exhaustive; dl payloads never cross the boundary (the
-        # cross-field combined tf norm applies later)
+        # dl payloads never cross the boundary (the cross-field combined
+        # tf norm applies later)
         for pdf in batches:
             if not len(pdf):
                 continue
-            counts = pdf["n_docs"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            gaps = codec.varbyte_decode(
-                b"".join(pdf["doc_bytes"])
-            ).astype(np.int64)
-            gaps[starts] += pdf["doc_first"].to_numpy(np.int64)
+            d = codec.decode_batch(pdf, tf=True)
+            counts = d["counts"]
             yield pd.DataFrame(
                 {"qid": np.repeat(pdf["qid"].to_numpy(np.int64), counts),
                  "term": np.repeat(pdf["term"].to_numpy(object), counts),
-                 "doc_int": codec.segmented_positions(gaps, counts),
-                 "tf": codec.varbyte_decode(
-                     b"".join(pdf["tf_bytes"])
-                 ).astype(np.int64) + 1}
+                 "doc_int": d["doc_int"],
+                 "tf": d["tf"]}
             )
 
     return joined.select(
@@ -1911,36 +1902,19 @@ def _decode_positional_terms(pdf: pd.DataFrame) -> dict[str, tuple]:
     """Decode every (term, seg) posting-block group of ``pdf`` into sorted
     numpy arrays: term -> (ids, tfs, dls, flat_positions, starts).
 
-    Batch-level decode (guide §4.2): ONE varbyte pass per payload column
-    over the whole group frame — a block's pos_bytes is exactly the
-    concatenation of its docs' delta payloads, so one segmented cumsum
-    with per-doc tf counts reproduces decode_block_positions for every
-    block at once — then per-term slices from the block boundaries. The
-    per-term values are identical to the former per-block decode loop."""
+    One codec.decode_batch call over the whole group frame, then per-term
+    slices from the block boundaries."""
     by_term: dict[str, tuple] = {}
     if not len(pdf):
         return by_term
     pdf = pdf.sort_values(
         ["term", "doc_first"], kind="stable", ignore_index=True
     )
-    counts = pdf["n_docs"].to_numpy(np.int64)
-    b_starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    gaps = codec.varbyte_decode(
-        b"".join(pdf["doc_bytes"])
-    ).astype(np.int64)
-    gaps[b_starts] += pdf["doc_first"].to_numpy(np.int64)
-    ids_all = codec.segmented_positions(gaps, counts)
-    tfs_all = codec.varbyte_decode(
-        b"".join(pdf["tf_bytes"])
-    ).astype(np.int64) + 1
-    dls_all = codec.varbyte_decode(
-        b"".join(pdf["dl_bytes"])
-    ).astype(np.int64) + 1
-    flat_all = codec.segmented_positions(
-        codec.varbyte_decode(b"".join(pdf["pos_bytes"])).astype(np.int64),
-        tfs_all,
-    )
-    doc_pos_starts = np.concatenate(([0], np.cumsum(tfs_all)[:-1]))
+    d = codec.decode_batch(pdf, dl=True, positions=True)
+    counts = d["counts"]
+    b_starts = np.cumsum(counts) - counts
+    ids_all, tfs_all, dls_all = d["doc_int"], d["tf"], d["dl"]
+    flat_all, doc_pos_starts = d["positions"], d["pos_starts"]
     terms = pdf["term"].to_numpy(object)
     t_change = np.ones(len(pdf), dtype=bool)
     t_change[1:] = terms[1:] != terms[:-1]
@@ -5344,8 +5318,6 @@ def _termvectors_resolved(
         return spark.createDataFrame(
             [], "doc_id string, term string, tf long, df long"
         )
-    import numpy as _np
-
     tpdf = pd.DataFrame(
         {"doc_int": rows["doc_int"].astype("int64"),
          "t_seg": rows["seg"].astype("int64")}
@@ -5353,62 +5325,55 @@ def _termvectors_resolved(
     segs = sorted(tpdf["t_seg"].unique().tolist())
     # The wanted ids are QUERY-sized (an explicit id list — the ES
     # _termvectors contract), so they travel in the task closure as one
-    # sorted array per segment instead of a broadcast range join: hash
-    # doc_ints spread over the whole int64 space, so a block's
-    # [doc_first, doc_last] range covers almost every wanted id in its
-    # segment and the old join emitted one row — and one FULL block
-    # decode — per (block, wanted id) pair. Now each block is decoded
-    # ONCE and all wanted ids resolve with one vectorized searchsorted
-    # (guide §4.2); the range check happens against the want array
-    # before any decode, so blocks with no wanted doc skip the codec
-    # entirely. Output rows are identical: within a (term, seg) the
-    # blocks partition the sorted doc space, so each wanted id matches
-    # at most one block per term.
+    # sorted array per segment. A block decodes only when its
+    # [doc_first, doc_last] range holds a wanted id of its segment; the
+    # kept blocks of a batch decode in one call.
     wants_by_seg = {
-        int(s): _np.sort(
-            tpdf.loc[tpdf["t_seg"] == s, "doc_int"].to_numpy(_np.int64)
+        int(s): np.sort(
+            tpdf.loc[tpdf["t_seg"] == s, "doc_int"].to_numpy(np.int64)
         )
         for s in segs
     }
     blocks = (
         store.postings(spark)
         .filter(F.col("seg").isin(segs))
-        .select(
-            "term", "seg", "doc_first", "doc_last",
-            "doc_bytes", "tf_bytes", "dl_bytes",
-        )
+        .select("term", "seg", "n_docs", "doc_first", "doc_last",
+                "doc_bytes", "tf_bytes")
     )
 
-    def run(batches):
-        import numpy as np
+    def wanted(seg: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+        """Per entry: does a wanted id of its segment lie in [lo, hi]?"""
+        out = np.zeros(seg.size, dtype=bool)
+        for s, wants in wants_by_seg.items():
+            m = seg == s
+            out[m] = np.searchsorted(wants, lo[m], side="left") < (
+                np.searchsorted(wants, hi[m], side="right")
+            )
+        return out
 
+    def run(batches):
         for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                wants = wants_by_seg.get(int(row.seg))
-                if wants is None:
-                    continue
-                lo = np.searchsorted(wants, row.doc_first, side="left")
-                hi = np.searchsorted(wants, row.doc_last, side="right")
-                if lo >= hi:
-                    continue  # no wanted doc in this block's range
-                cand_ints = wants[lo:hi]
-                d_ids, tfs, _dls = codec.decode_block(
-                    row.doc_first, row.doc_bytes, row.tf_bytes, row.dl_bytes
+            pdf = pdf[wanted(
+                pdf["seg"].to_numpy(np.int64),
+                pdf["doc_first"].to_numpy(np.int64),
+                pdf["doc_last"].to_numpy(np.int64),
+            )]
+            if not len(pdf):
+                continue
+            d = codec.decode_batch(pdf, tf=True)
+            ids = d["doc_int"]
+            ok = wanted(
+                np.repeat(pdf["seg"].to_numpy(np.int64), d["counts"]),
+                ids, ids,
+            )
+            if ok.any():
+                yield pd.DataFrame(
+                    {"doc_int": ids[ok],
+                     "term": np.repeat(
+                         pdf["term"].to_numpy(object), d["counts"]
+                     )[ok],
+                     "tf": d["tf"][ok]}
                 )
-                pos = np.searchsorted(d_ids, cand_ints)
-                pos_c = np.minimum(pos, len(d_ids) - 1)
-                ok = d_ids[pos_c] == cand_ints
-                if ok.any():
-                    outs.append(
-                        pd.DataFrame(
-                            {"doc_int": cand_ints[ok].astype("int64"),
-                             "term": row.term,
-                             "tf": tfs[pos_c[ok]].astype("int64")}
-                        )
-                    )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
 
     decoded = blocks.mapInPandas(
         run, schema="doc_int long, term string, tf long"
@@ -7964,43 +7929,21 @@ def _score_exhaustive(joined: DataFrame, avgdl: float) -> DataFrame:
     per_term_avgdl = "avgdl" in joined.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # batch-level decode (guide §4.2): one varbyte decode per payload
-        # column over the whole Arrow batch + one segmented cumsum,
-        # instead of three numpy decodes per block row. Per-posting
-        # arithmetic is the identical elementwise expression (tf_norm's
-        # own formula — scalar vs per-element avgdl of the same value is
-        # the same IEEE division), in the identical row order.
         for pdf in batches:
             if not len(pdf):
                 continue
-            counts = pdf["n_docs"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            gaps = codec.varbyte_decode(
-                b"".join(pdf["doc_bytes"])
-            ).astype(np.int64)
-            gaps[starts] += pdf["doc_first"].to_numpy(np.int64)
-            ids = codec.segmented_positions(gaps, counts)
-            tfs = codec.varbyte_decode(
-                b"".join(pdf["tf_bytes"])
-            ).astype(np.int64) + 1
-            dls = codec.varbyte_decode(
-                b"".join(pdf["dl_bytes"])
-            ).astype(np.int64) + 1
+            d = codec.decode_batch(pdf, tf=True, dl=True)
+            counts = d["counts"]
+            ad = (
+                np.repeat(pdf["avgdl"].to_numpy(np.float64), counts)
+                if per_term_avgdl
+                else avgdl
+            )
             w = np.repeat(pdf["w"].to_numpy(np.float64), counts)
-            if per_term_avgdl:
-                ad = np.repeat(pdf["avgdl"].to_numpy(np.float64), counts)
-                tf64 = tfs.astype(np.float64)
-                norm = tf64 / (
-                    tf64
-                    + bm25.K1
-                    * (1.0 - bm25.B + bm25.B * dls.astype(np.float64) / ad)
-                )
-            else:
-                norm = bm25.tf_norm(tfs, dls, avgdl)
             yield pd.DataFrame(
                 {"qid": np.repeat(pdf["qid"].to_numpy(np.int64), counts),
-                 "doc_int": ids,
-                 "score": w * norm}
+                 "doc_int": d["doc_int"],
+                 "score": w * bm25.tf_norm(d["tf"], d["dl"], ad)}
             )
 
     cols = ["qid", "w", "n_docs", "doc_first", "doc_bytes", "tf_bytes",
@@ -8010,8 +7953,8 @@ def _score_exhaustive(joined: DataFrame, avgdl: float) -> DataFrame:
     )
 
 
-_WAND_COLS = ["qid", "seg", "term", "w", "doc_first", "doc_last", "max_tf",
-              "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
+_WAND_COLS = ["qid", "seg", "term", "w", "n_docs", "doc_first", "doc_last",
+              "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes"]
 _WAND_SCHEMA = "qid long, doc_int long, score double"
 
 
@@ -8098,28 +8041,20 @@ def _score_wand(
         tau = float("-inf")                         # kth-best partial so far
 
         def decode_rows(tdf: pd.DataFrame, sel: np.ndarray):
-            ids_l, sc_l = [], []
-            for ri in np.nonzero(sel)[0]:
-                row = tdf.iloc[ri]
-                ids, tfs, dls = codec.decode_block(
-                    row["doc_first"], row["doc_bytes"],
-                    row["tf_bytes"], row["dl_bytes"],
-                )
-                mask = None
-                if allow is not None:
-                    mask = np.isin(ids, allow)
-                if dead is not None:
-                    m2 = ~np.isin(ids, dead)
-                    mask = m2 if mask is None else (mask & m2)
-                if mask is not None:
-                    ids, tfs, dls = ids[mask], tfs[mask], dls[mask]
-                    if not ids.size:
-                        continue
-                ids_l.append(ids)
-                sc_l.append(row["w"] * bm25.tf_norm(tfs, dls, avgdl))
-            if not ids_l:
+            if not sel.any():  # skipping every block is the common case
                 return np.zeros(0, np.int64), np.zeros(0, np.float64)
-            return np.concatenate(ids_l), np.concatenate(sc_l)
+            rows = tdf[sel]
+            d = codec.decode_batch(rows, tf=True, dl=True)
+            ids = d["doc_int"]
+            scores = np.repeat(
+                rows["w"].to_numpy(np.float64), d["counts"]
+            ) * bm25.tf_norm(d["tf"], d["dl"], avgdl)
+            keep = np.ones(ids.size, dtype=bool)
+            if allow is not None:
+                keep &= np.isin(ids, allow)
+            if dead is not None:
+                keep &= ~np.isin(ids, dead)
+            return ids[keep], scores[keep]
 
         def final_cut(ids: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
             """Top-k with ties; under a cursor, top-k among strictly-below
@@ -10339,26 +10274,18 @@ def search_sparse_vector(
     joined = _matched_blocks(spark, store, qt[["qid", "term", "w"]])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # batch-level decode (guide §4.2) — same shape as
-        # _score_exhaustive; dl payloads never cross the boundary (the
-        # sparse dot product has no length norm)
+        # dl payloads never cross the boundary (the sparse dot product
+        # has no length norm)
         for pdf in batches:
             if not len(pdf):
                 continue
-            counts = pdf["n_docs"].to_numpy(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            gaps = codec.varbyte_decode(
-                b"".join(pdf["doc_bytes"])
-            ).astype(np.int64)
-            gaps[starts] += pdf["doc_first"].to_numpy(np.int64)
-            tfs = codec.varbyte_decode(
-                b"".join(pdf["tf_bytes"])
-            ).astype(np.int64) + 1
+            d = codec.decode_batch(pdf, tf=True)
+            counts = d["counts"]
             yield pd.DataFrame(
                 {"qid": np.repeat(pdf["qid"].to_numpy(np.int64), counts),
-                 "doc_int": codec.segmented_positions(gaps, counts),
+                 "doc_int": d["doc_int"],
                  "score": np.repeat(pdf["w"].to_numpy(np.float64), counts)
-                 * np.log1p(tfs)}
+                 * np.log1p(d["tf"])}
             )
 
     cand = joined.select(
@@ -10633,27 +10560,14 @@ def search_frequent_item_sets(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # batch-level decode (guide §4.2): ONE varbyte decode over the
-        # whole Arrow batch's concatenated doc_bytes + one segmented
-        # cumsum, instead of three numpy decodes per block row (tf/dl
-        # payloads were decoded and thrown away; they no longer even
-        # cross the Python boundary). Identical ids per block.
-        import numpy as np
-
+        # tf/dl payloads never cross the Python boundary
         for pdf in batches:
             if not len(pdf):
                 continue
-            counts = pdf["n_docs"].to_numpy(np.int64)
-            gaps = codec.varbyte_decode(
-                b"".join(pdf["doc_bytes"])
-            ).astype(np.int64)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            # each block's first gap is stored as 0 (first doc rides
-            # doc_first absolutely) — make it absolute per block
-            gaps[starts] += pdf["doc_first"].to_numpy(np.int64)
+            d = codec.decode_batch(pdf)
             yield pd.DataFrame(
-                {"term": np.repeat(pdf["term"].to_numpy(object), counts),
-                 "doc_int": codec.segmented_positions(gaps, counts)}
+                {"term": np.repeat(pdf["term"].to_numpy(object), d["counts"]),
+                 "doc_int": d["doc_int"]}
             )
 
     items = blocks.select(

@@ -4,6 +4,7 @@ wrapper. Event model mirrors /root/reference/test/utils/
 ddb-stream-event-formatter.js (NEW_AND_OLD_IMAGES)."""
 
 import os
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -11,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamo2es_lambda_spark import IndexerConfig
+from dynamo2es_lambda_spark.functions import codec
 from dynamo2es_lambda_spark.operators import actions
 from dynamo2es_lambda_spark.plans import build, cdc, search
 from dynamo2es_lambda_spark.sources import synthetic
@@ -218,6 +220,88 @@ def test_phrase_survives_cdc_and_compaction(spark, tmp_path_factory):
     store = search.load_store(path)
     assert store.meta["positions"] is True
     check(exact_ranks=True)  # post-compaction: exact stats, payloads intact
+
+
+_BLOCK_KEY = ["term", "seg", "block_id", "n_docs", "doc_first", "doc_last",
+              "max_tf", "min_dl", "doc_bytes", "tf_bytes", "dl_bytes",
+              "pos_bytes"]
+
+
+def _block_tuple(b) -> tuple:
+    return tuple(
+        None if b[c] is None
+        else bytes(b[c]) if c.endswith("_bytes")
+        else str(b[c]) if c == "term"
+        else int(b[c])
+        for c in _BLOCK_KEY
+    )
+
+
+def _reference_compaction(pre: pd.DataFrame, dead: np.ndarray):
+    """Drop dead postings block by block: untouched blocks keep their row,
+    emptied blocks vanish, the rest are codec.encode_blocks over the
+    surviving postings (each doc's position payload is its own varbyte
+    slice of the block's pos_bytes)."""
+    out, n_rewritten = [], 0
+    for row in pre.to_dict("records"):
+        ids, tfs, dls = codec.decode_block(
+            row["doc_first"], row["doc_bytes"], row["tf_bytes"],
+            row["dl_bytes"],
+        )
+        keep = ~np.isin(ids, dead)
+        if keep.all():
+            out.append(_block_tuple(row))
+            continue
+        if not keep.any():
+            continue
+        payloads = None
+        if row["pos_bytes"] is not None:
+            per_doc = np.split(
+                codec.varbyte_decode(row["pos_bytes"]), np.cumsum(tfs)[:-1]
+            )
+            payloads = [codec.varbyte_encode(per_doc[i])
+                        for i in np.flatnonzero(keep)]
+        (b,) = codec.encode_blocks(
+            ids[keep], tfs[keep], dls[keep], pos_payloads=payloads
+        )
+        b.update(term=row["term"], seg=row["seg"], block_id=row["block_id"])
+        out.append(_block_tuple(b))
+        n_rewritten += 1
+    return out, n_rewritten
+
+
+@pytest.mark.parametrize("positions", [True, False])
+def test_compaction_rewrites_blocks_byte_identically(
+    spark, tmp_path_factory, positions
+):
+    """Every block row compaction writes equals the per-block reference:
+    codec.encode_blocks over that block's surviving postings (positional
+    payloads included; null pos_bytes in a store built without
+    positions)."""
+    from dynamo2es_lambda_spark.sources import store_io
+
+    path = str(tmp_path_factory.mktemp("cdc_bytes"))
+    build.build_index(
+        spark.createDataFrame(_corpus0()), CFG, path, segment_docs=64,
+        num_buckets=8, positions=positions,
+    )
+    cdc.apply_changes(_events_df(spark), CFG, path, segment_docs=64,
+                      num_buckets=8)
+    pre = store_io.read_blocks(spark, path).toPandas()
+    dead = (
+        spark.read.parquet(os.path.join(path, "dead"))
+        .toPandas()["doc_int"].to_numpy(np.int64)
+    )
+    want, n_rewritten = _reference_compaction(pre, dead)
+    assert n_rewritten > 0
+    cdc.compact_store(spark, path, num_buckets=8)
+    post = store_io.read_blocks(spark, path).toPandas()
+    got = [_block_tuple(r) for r in post.to_dict("records")]
+    if positions:
+        assert all(t[-1] is not None for t in got)
+    else:
+        assert all(t[-1] is None for t in got)
+    assert Counter(got) == Counter(want)
 
 
 def test_cdc_inherits_store_bucket_layout(spark, tmp_path_factory):

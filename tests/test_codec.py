@@ -2,6 +2,7 @@
 no codec tests — ours are property-based per SURVEY.md §5.2.8)."""
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -102,12 +103,116 @@ def test_segmented_positions_roundtrip(gap_groups):
     assert (deltas >= 0).all()  # varbyte-safe
     back = codec.segmented_positions(deltas, counts)
     assert back.tolist() == flat.tolist()
-    # full wire round-trip through grouped varbyte + block decode helper
+    # full wire round-trip through grouped varbyte + the batch decoder
     payloads = codec.varbyte_encode_grouped(deltas, counts)
-    blob = b"".join(payloads)
-    flat2, starts = codec.decode_block_positions(blob, counts)
+    ids = np.arange(counts.size, dtype=np.int64)
+    frame = pd.DataFrame(
+        codec.encode_blocks(ids, counts, counts, pos_payloads=payloads)
+    )
+    assert len(frame) == 1
+    assert frame["pos_bytes"][0] == b"".join(payloads)
+    d = codec.decode_batch(frame, positions=True)
+    flat2, starts = d["positions"], d["pos_starts"]
     assert flat2.tolist() == flat.tolist()
     off = 0
     for i, g in enumerate(pos_groups):
         assert starts[i] == off
         off += len(g)
+
+
+def _reference_decode(frame: pd.DataFrame, pos_by_key: dict) -> dict:
+    """Per-block decode_block output concatenated in frame order; positions
+    come from the source lists (none for a block without pos_bytes)."""
+    ids_l, tfs_l, dls_l, pos_l, pos_starts = [], [], [], [], []
+    n_pos = 0
+    for row in frame.itertuples(index=False):
+        ids, tfs, dls = codec.decode_block(
+            row.doc_first, row.doc_bytes, row.tf_bytes, row.dl_bytes
+        )
+        ids_l.append(ids)
+        tfs_l.append(tfs)
+        dls_l.append(dls)
+        for doc in ids:
+            pos_starts.append(n_pos)
+            if row.pos_bytes is not None:
+                pos = pos_by_key[row.term, int(doc)]
+                pos_l.extend(pos)
+                n_pos += len(pos)
+    return {
+        "counts": frame["n_docs"].tolist(),
+        "doc_int": np.concatenate(ids_l).tolist(),
+        "tf": np.concatenate(tfs_l).tolist(),
+        "dl": np.concatenate(dls_l).tolist(),
+        "positions": pos_l,
+        "pos_starts": pos_starts,
+    }
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.one_of(
+                st.just(1),
+                st.just(codec.BLOCK_SIZE + 1),
+                st.integers(min_value=1, max_value=3 * codec.BLOCK_SIZE),
+            ),                                   # postings of the term
+            st.booleans(),                       # term stored with positions
+        ),
+        min_size=1,
+        max_size=4,
+    ),
+    st.integers(min_value=0, max_value=2**32 - 1),
+)
+@settings(max_examples=50, deadline=None)
+def test_decode_batch_matches_per_block_decode(terms, seed):
+    """decode_batch over a multi-term, multi-block frame == the per-block
+    decode_block output concatenated in frame order. Each term's postings
+    are split over two CDC batches (two sorted runs) and every block row is
+    shuffled, so blocks of the two batches interleave; terms without
+    positions store a null pos_bytes."""
+    rng = np.random.default_rng(seed)
+    rows, pos_by_key = [], {}
+    for ti, (n, with_pos) in enumerate(terms):
+        term = f"t{ti}"
+        doc_ids = np.sort(
+            rng.choice(2**62, size=n, replace=False).astype(np.int64)
+            - 2**61
+        )
+        tfs = rng.integers(1, 6, size=n)
+        dls = tfs + rng.integers(0, 3000, size=n)
+        batch = rng.integers(0, 2, size=n)
+        for bi in (0, 1):
+            sel = batch == bi
+            if not sel.any():
+                continue
+            payloads = None
+            if with_pos:
+                payloads = []
+                for doc, tf in zip(doc_ids[sel], tfs[sel]):
+                    pos = np.cumsum(rng.integers(0, 200, size=tf))
+                    pos_by_key[term, int(doc)] = pos.tolist()
+                    payloads.append(codec.varbyte_encode(
+                        codec.segmented_deltas(pos, np.array([tf]))
+                    ))
+            for b in codec.encode_blocks(
+                doc_ids[sel], tfs[sel], dls[sel], pos_payloads=payloads
+            ):
+                rows.append({"term": term, **b})
+    frame = pd.DataFrame(rows)
+    frame = frame.iloc[rng.permutation(len(frame))].reset_index(drop=True)
+    want = _reference_decode(frame, pos_by_key)
+    got = codec.decode_batch(frame, tf=True, dl=True, positions=True)
+    for key, val in want.items():
+        assert got[key].tolist() == val, key
+    doc_only = codec.decode_batch(frame)
+    assert set(doc_only) == {"counts", "doc_int"}
+    assert doc_only["doc_int"].tolist() == want["doc_int"]
+
+
+def test_decode_batch_empty_frame():
+    frame = pd.DataFrame(
+        {"n_docs": [], "doc_first": [], "doc_bytes": [], "tf_bytes": [],
+         "dl_bytes": [], "pos_bytes": []}
+    )
+    got = codec.decode_batch(frame, tf=True, dl=True, positions=True)
+    assert all(v.size == 0 for v in got.values())

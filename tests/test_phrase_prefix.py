@@ -108,18 +108,16 @@ def test_positions_roundtrip_store(spark, pos_store, oracle):
         oracle.doc_ids[i]: oracle.toks[i] for i in range(oracle.n_docs)
     }
     sample = blocks.sample(n=min(60, len(blocks)), random_state=7)
+    dec = codec.decode_batch(sample, positions=True)
+    terms = np.repeat(sample["term"].to_numpy(object), dec["counts"])
+    flat, starts, tfs = dec["positions"], dec["pos_starts"], dec["tf"]
     checked = 0
-    for row in sample.itertuples(index=False):
-        ids, tfs, _dls = codec.decode_block(
-            row.doc_first, row.doc_bytes, row.tf_bytes, row.dl_bytes
-        )
-        flat, starts = codec.decode_block_positions(row.pos_bytes, tfs)
-        for i, d in enumerate(ids):
-            dt = toks_by_id[id_by_int[d]]
-            want = [j for j, t in enumerate(dt) if t == row.term]
-            got = flat[starts[i]: starts[i] + tfs[i]].tolist()
-            assert got == want, (row.term, got, want)
-            checked += 1
+    for i, (term, d) in enumerate(zip(terms, dec["doc_int"])):
+        dt = toks_by_id[id_by_int[d]]
+        want = [j for j, t in enumerate(dt) if t == term]
+        got = flat[starts[i]: starts[i] + tfs[i]].tolist()
+        assert got == want, (term, got, want)
+        checked += 1
     assert checked > 100
 
 
